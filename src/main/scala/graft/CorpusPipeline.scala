@@ -53,7 +53,10 @@ import graft.sources.IngestDiscovery
   *     layout write of the final corpus.
   *
   * Every stage is deterministic (md5 ranks, min-id representatives — no
-  * RNG), so reruns produce byte-identical zones. Returns the run report
+  * RNG), so reruns produce byte-identical zones. Each stage re-reads its
+  * predecessor's zone with the writer's schema
+  * ([[IngestDiscovery.readZone]]), so no read launches a
+  * schema-inference job. Returns the run report
   * as (stage, rows, seconds).
   */
 object CorpusPipeline {
@@ -80,7 +83,6 @@ object CorpusPipeline {
       reports :+= Pipeline.StageReport(stage, rows, (System.nanoTime() - t0) / 1e9)
     }
 
-    // 1. ingest: canonicalize + stage metadata -> raw zone
     // Every stage's reported row count comes from the write's own
     // observe() metric (r19 Finding 2 applied pipeline-wide): identical by
     // construction to a re-read count, minus one re-list + footer-scan job
@@ -89,40 +91,52 @@ object CorpusPipeline {
     // NEXT stage, the zone contract).
     def obsCount(stage: String) =
       org.apache.spark.sql.Observation(s"${stage}_rows")
-    timed("ingest") {
+    /** Times stage `name`: `body` builds the stage's output (any side
+      * writes it makes are on the clock too), which is written to
+      * `<outRoot>/<zone>/documents` and counted by its observe() metric.
+      * Returns the zone, re-read with the writer's schema. */
+    def stage(name: String, zone: String)(body: => DataFrame): DataFrame = {
+      var out: DataFrame = null
+      timed(name) {
+        val o = obsCount(name)
+        out = body
+        IngestDiscovery.writeZone(out.observe(o, count(lit(1)).as("n")),
+          outRoot, zone, "documents")
+        Pipeline.writtenRows(spark, o, s"$outRoot/$zone/documents")
+      }
+      IngestDiscovery.readZone(out, outRoot, zone, "documents")
+    }
+
+    // 1. ingest: canonicalize + stage metadata -> raw zone
+    val raw = stage("ingest", "raw") {
       val canon = docs.withColumn("text",
         graft.functions.NativeExprs.nfcNormalize(col("text")))
-      val o = obsCount("ingest")
-      IngestDiscovery.writeZone(
-        IngestDiscovery.staged(canon, "corpus", runId, extractTime)
-          .observe(o, count(lit(1)).as("n")),
-        outRoot, "raw", "documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/raw/documents")
+      IngestDiscovery.staged(canon, "corpus", runId, extractTime)
     }
-    val raw = spark.read.parquet(s"$outRoot/raw/documents")
 
     // 2. quality gate: keep/reject split with reasons. The gate verdict
     // table is doc_id-sized — localCheckpoint materializes it ONCE so the
     // rejected and gated writes don't each re-run the whole token-stats
     // subtree (two full gate computes measured as twin stages in r19's
     // per-job profile).
+    var gatedOut: DataFrame = null
     timed("quality_gate") {
       val gate = TextAnalysis.corpusGate(raw, "doc_id", "text",
           minTokens, minStopRatio, maxDupFraction)
         .select("doc_id", "keep", "_reasons").ckptLocal()
-      val keep = gate.where(col("keep")).select("doc_id")
+      gatedOut = raw.join(gate.where(col("keep")).select("doc_id"), "doc_id")
       // the reject/keep writes consume the materialized gate table and
       // write disjoint zones — overlapped (guide §2.6)
       val o = obsCount("quality_gate")
       Pipeline.inParallel(
-        () => raw.join(gate.where(!col("keep")).select("doc_id", "_reasons"), "doc_id")
-          .write.mode("overwrite").parquet(s"$outRoot/rejected/documents"),
-        () => raw.join(keep, "doc_id")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/gated/documents"))
+        () => IngestDiscovery.writeZone(
+          raw.join(gate.where(!col("keep")).select("doc_id", "_reasons"), "doc_id"),
+          outRoot, "rejected", "documents"),
+        () => IngestDiscovery.writeZone(gatedOut.observe(o, count(lit(1)).as("n")),
+          outRoot, "gated", "documents"))
       Pipeline.writtenRows(spark, o, s"$outRoot/gated/documents")
     }
-    var gated = spark.read.parquet(s"$outRoot/gated/documents")
+    var gated = IngestDiscovery.readZone(gatedOut, outRoot, "gated", "documents")
 
     // 2b. optional model-based gates (default-off — the adjudicated
     // report counts are untouched unless enabled): the per-doc hashed
@@ -131,46 +145,32 @@ object CorpusPipeline {
     // everything it submitted, not on its survivors)
     classifierWeights.foreach { w =>
       val preGate = gated
-      timed("model_gate") {
+      gated = stage("model_gate", "model_gated") {
         val kept = TextAnalysis.hashClassifier(preGate, "doc_id", "text", w)
           .where(col("kept")).select("doc_id")
-        val o = obsCount("model_gate")
         preGate.join(kept, "doc_id")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/model_gated/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/model_gated/documents")
       }
-      gated = spark.read.parquet(s"$outRoot/model_gated/documents")
       domainMinKeepRate.foreach { minRate =>
-        timed("domain_gate") {
+        val modelGated = gated
+        gated = stage("domain_gate", "domain_gated") {
           val srcKeep = TextAnalysis.domainGate(
               preGate.withColumn("_len", length(col("text"))),
               "doc_id", "text", "source", "_len", w, domainMinDocs, minRate)
             .where(col("src_kept")).select("source")
-          val o = obsCount("domain_gate")
-          gated.join(broadcast(srcKeep), "source")
-            .observe(o, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$outRoot/domain_gated/documents")
-          Pipeline.writtenRows(spark, o, s"$outRoot/domain_gated/documents")
+          modelGated.join(broadcast(srcKeep), "source")
         }
-        gated = spark.read.parquet(s"$outRoot/domain_gated/documents")
       }
     }
 
     // 3. per-source cap (domain cap)
-    timed("source_cap") {
-      val o = obsCount("source_cap")
+    val capped = stage("source_cap", "capped") {
       gated.join(
-          TextAnalysis.sourceCap(gated, "doc_id", "source", capPerSource)
-            .select("doc_id"), "doc_id")
-        .observe(o, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outRoot/capped/documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/capped/documents")
+        TextAnalysis.sourceCap(gated, "doc_id", "source", capPerSource)
+          .select("doc_id"), "doc_id")
     }
-    val capped = spark.read.parquet(s"$outRoot/capped/documents")
 
     // 4. dedup: exact keep-min-id, then near-dup cluster representatives
-    timed("dedup") {
+    var deduped = stage("dedup", "deduped") {
       // exact survivors feed THREE consumers (minhash pairs, cluster
       // labels, the final write) — localCheckpoint materializes the
       // exact-dedup join once instead of re-running the content-hash
@@ -182,86 +182,64 @@ object CorpusPipeline {
         shingleN = 3, threshold = nearDupThreshold)
       val reps = Dedup.nearDupClusters(exact, pairs, "doc_id")
         .where(col("kept")).select(col("doc_id"))
-      val o = obsCount("dedup")
       exact.join(reps, "doc_id")
-        .observe(o, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outRoot/deduped/documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/deduped/documents")
     }
-    var deduped = spark.read.parquet(s"$outRoot/deduped/documents")
 
     // 4b. optional span-level scrub: rewrite texts keeping only the
     // corpus-first occurrence of each aligned span (no rows dropped)
     spanScrub.foreach { spanTokens =>
-      timed("span_scrub") {
-        val o = obsCount("span_scrub")
-        val scrubbed = Dedup.spanDedup(deduped, "doc_id", "text", spanTokens)
+      val in = deduped
+      deduped = stage("span_scrub", "span_scrubbed") {
+        val scrubbed = Dedup.spanDedup(in, "doc_id", "text", spanTokens)
           .select(col("doc_id"), col("text_dedup"))
-        deduped.drop("text")
+        in.drop("text")
           .join(scrubbed, Seq("doc_id"), "left")
           // all-empty docs yield no spanDedup row: keep them with empty text
           .withColumn("text", coalesce(col("text_dedup"), lit("")))
           .drop("text_dedup")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/span_scrubbed/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/span_scrubbed/documents")
       }
-      deduped = spark.read.parquet(s"$outRoot/span_scrubbed/documents")
     }
 
     // 4c. optional SemDeDup stage over the survivors' embeddings: drop
     // docs whose derived cluster holds a lower-id near-duplicate
     embeddings.foreach { emb =>
-      timed("semantic_dedup") {
-        val survivorEmb = emb.join(deduped.select("doc_id"), "doc_id")
+      val in = deduped
+      deduped = stage("semantic_dedup", "semantic") {
+        val survivorEmb = emb.join(in.select("doc_id"), "doc_id")
         val dropIds = graft.operators.Similarity
           .semanticDedup(survivorEmb, "doc_id", "embedding", semanticThreshold)
           .where(!col("keep")).select("doc_id")
-        val o = obsCount("semantic_dedup")
-        deduped.join(dropIds, Seq("doc_id"), "left_anti")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/semantic/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/semantic/documents")
+        in.join(dropIds, Seq("doc_id"), "left_anti")
       }
-      deduped = spark.read.parquet(s"$outRoot/semantic/documents")
     }
 
     // 4d. optional tokenizer induction: train BPE on the survivors, write
     // the merge table (the tokenizer artifact), annotate docs with their
     // subword piece counts
     bpeMerges.foreach { n =>
-      timed("tokenizer") {
-        val merges = graft.operators.Bpe.train(deduped, "text", n)
+      val in = deduped
+      deduped = stage("tokenizer", "tokenized") {
+        val merges = graft.operators.Bpe.train(in, "text", n)
         graft.operators.Bpe.mergesDF(spark, merges)
           .coalesce(1).write.mode("overwrite").parquet(s"$outRoot/tokenizer/merges")
-        val o = obsCount("tokenizer")
-        deduped
-          .withColumn("n_pieces",
-            size(graft.functions.NativeExprs.bpeSegment(
-              graft.operators.Bpe.tokens(col("text")), merges, "</w>")))
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/tokenized/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/tokenized/documents")
+        in.withColumn("n_pieces",
+          size(graft.functions.NativeExprs.bpeSegment(
+            graft.operators.Bpe.tokens(col("text")), merges, "</w>")))
       }
-      deduped = spark.read.parquet(s"$outRoot/tokenized/documents")
     }
 
     // 4e. optional perplexity bucketing: per-stratum exact-NTILE cut of
     // the survivors' own unigram LM score (annotates, never drops)
     pplBuckets.foreach { k =>
-      timed("ppl_buckets") {
-        val lm = TextAnalysis.lmScore(deduped, "doc_id", "text")
-        val scored = deduped.select(col("doc_id"), col(pplStratum)).join(lm, "doc_id")
+      val in = deduped
+      deduped = stage("ppl_buckets", "ppl") {
+        val lm = TextAnalysis.lmScore(in, "doc_id", "text")
+        val scored = in.select(col("doc_id"), col(pplStratum)).join(lm, "doc_id")
         val buckets = graft.operators.Analytics.ntileBuckets(scored,
             col(pplStratum), col("avg_logprob"), col("doc_id"), k)
           .select(col("id").as("doc_id"), col("bucket").as("ppl_bucket"))
-        val o = obsCount("ppl_buckets")
-        deduped.join(buckets, Seq("doc_id"), "left")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/ppl/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/ppl/documents")
+        in.join(buckets, Seq("doc_id"), "left")
       }
-      deduped = spark.read.parquet(s"$outRoot/ppl/documents")
     }
 
     // 5. token-balanced shards, laid out one directory per shard

@@ -30,6 +30,11 @@ import graft.sources.IngestDiscovery
   *  4. `report`      — per-zone stats and per-rule violation counts written
   *     under `report/` (dashboard.py:30-40's data source, as a sink).
   *
+  * Each stage re-reads its predecessor's zone files, with the schema of
+  * the DataFrame that wrote them ([[IngestDiscovery.readZone]]) — no
+  * schema-inference job per read. Stage and layout-hint row counts come
+  * from `observe()` metrics on the writes, never from a read-back count.
+  *
   * Returns the run report as a DataFrame: (stage, rows, seconds) — the
   * reference's step_times/step_results table.
   */
@@ -88,11 +93,14 @@ object Pipeline {
              runId: String, extractTime: String = "2026-01-01 00:00:00"): DataFrame = {
     import spark.implicits._
     var reports = Vector.empty[StageReport]
-    def timed(stage: String)(body: => Long): Unit = {
+    def timed(stage: String)(body: => Long): Long = {
       val t0 = System.nanoTime()
       val rows = body
       reports :+= StageReport(stage, rows, (System.nanoTime() - t0) / 1e9)
+      rows
     }
+    def observed(df: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
+      df.observe(obs, count(lit(1)).as("n"))
 
     // 1. stage raw: sources -> raw zone with staged metadata. Customer is
     // staged too and written partitioned by _run_id with DYNAMIC partition
@@ -110,6 +118,11 @@ object Pipeline {
     val customer = IngestDiscovery.staged(
       Tables.spread(spark, sfDir, "customer", Tables.customer(spark, sfDir)),
       "parquet", runId, extractTime)
+    val lineitem = IngestDiscovery.staged(
+      Tables.spread(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir)),
+      "parquet", runId, extractTime)
+    // raw lineitem rows, observed on its write: fact_lineitem's layout hint
+    val obsLine = org.apache.spark.sql.Observation("raw_lineitem_rows")
     timed("stage_raw") {
       // three disjoint zone writes — overlapped (guide §2.6): the next
       // write's tasks backfill executors freed by the previous one's tail.
@@ -118,8 +131,7 @@ object Pipeline {
       // construction to a re-read count, minus the re-list/footer job.
       val obsR = org.apache.spark.sql.Observation("stage_raw_rows")
       inParallel(
-        () => IngestDiscovery.writeZone(
-          orders.observe(obsR, count(lit(1)).as("n")), outRoot, "raw", "orders"),
+        () => IngestDiscovery.writeZone(observed(orders, obsR), outRoot, "raw", "orders"),
         // CAVEAT (ADVICE r19): dynamic overwrite + the v2 committer means a
         // run that dies MID-JOB can leave task-committed files for _run_id
         // partitions a later run doesn't rewrite. The rerun contract is
@@ -130,17 +142,13 @@ object Pipeline {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("_run_id")
           .parquet(s"$outRoot/raw/customer"),
-        () => IngestDiscovery.writeZone(
-          IngestDiscovery.staged(
-            Tables.spread(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir)),
-            "parquet", runId, extractTime),
-          outRoot, "raw", "lineitem"))
+        () => IngestDiscovery.writeZone(observed(lineitem, obsLine), outRoot, "raw", "lineitem"))
       Pipeline.writtenRows(spark, obsR, s"$outRoot/raw/orders")
     }
 
     // 2. quality: rule engine over the raw zone -> clean/error zones
     val annotated = {
-      val raw = spark.read.parquet(s"$outRoot/raw/orders")
+      val raw = IngestDiscovery.readZone(orders, outRoot, "raw", "orders")
       val (addRn, dupRule) = Quality.duplicateKeyRule("duplicate_key",
         col("o_orderkey"), Seq(col("_run_id")))
       val (addFk, fkRule) = Quality.fkRule("fk_customer", col("o_custkey"),
@@ -157,12 +165,18 @@ object Pipeline {
         // once instead of once per zone write
         .ckptLocalLazy()
     }
-    timed("quality") {
+    val cleanOrders = Quality.cleanZone(annotated)
+    val errorOrders = Quality.errorZone(annotated)
+    val cleanRows = timed("quality") {
+      // disjoint zone writes — overlapped (guide §2.6). Both first actions
+      // over the LAZY checkpoint run concurrently: each checkpoint block is
+      // computed by whichever task reaches it first and read by the other
+      // (the block manager's per-block write lock), so the rule engine
+      // still runs once.
       val obsC = org.apache.spark.sql.Observation("clean_rows")
-      IngestDiscovery.writeZone(
-        Quality.cleanZone(annotated).observe(obsC, count(lit(1)).as("n")),
-        outRoot, "clean", "orders")
-      IngestDiscovery.writeZone(Quality.errorZone(annotated), outRoot, "error", "orders")
+      inParallel(
+        () => IngestDiscovery.writeZone(observed(cleanOrders, obsC), outRoot, "clean", "orders"),
+        () => IngestDiscovery.writeZone(errorOrders, outRoot, "error", "orders"))
       Pipeline.writtenRows(spark, obsC, s"$outRoot/clean/orders")
     }
 
@@ -178,7 +192,7 @@ object Pipeline {
     def writtenRows(obs: org.apache.spark.sql.Observation, path: String): Long =
       Pipeline.writtenRows(spark, obs, path)
     timed("transform_load") {
-      val clean = spark.read.parquet(s"$outRoot/clean/orders")
+      val clean = IngestDiscovery.readZone(cleanOrders, outRoot, "clean", "orders")
 
       // dim_customer is the SCD2 dimension over ALL staged snapshots
       // (reference create_dwh_tables.sql:21-41 — dim_khach_hang IS the
@@ -186,31 +200,34 @@ object Pipeline {
       // gets its own surrogate key (IDENTITY analog: two-phase rank over
       // the (key, valid_from) composite), and validity is a lead() chain.
       val scdAttrs = Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      val custSnaps = spark.read.parquet(s"$outRoot/raw/customer")
+      val custSnaps = IngestDiscovery.readZone(customer, outRoot, "raw", "customer",
+          partitionedBy = Seq("_run_id"))
         .select(col("c_custkey") +: scdAttrs.map(col) :+ col("_extract_time").as("_snap"): _*)
       val dimCust = {
         // dimension-sized: localCheckpoint materializes the SCD2 window
         // chain once — withSurrogateKey consumes `versions` three times
-        // (pivot sample, distinct+rank chain, attribute join-back)
+        // (pivot sample, bucket counts, the ranked write)
         val versions = Star.scd2(custSnaps, "c_custkey", scdAttrs, "_snap")
           .withColumn("_vk", concat_ws("|", col("c_custkey"),
             date_format(col("valid_from"), "yyyyMMddHHmmss")))
           .ckptLocal()
         Star.withSurrogateKey(versions, "_vk", "customer_key").drop("_vk")
       }
+      // dim_date over the clean fact's date domain
+      // (create_dwh_tables.sql:108-125); its observed row count is the
+      // date-domain size the fact layout hints divide by
+      val dimDate = Star.dimDate(clean, "o_orderdate")
+      val obsD = org.apache.spark.sql.Observation("dim_date_rows")
       // the two dim writes touch disjoint paths — overlapped (guide §2.6);
       // dim_customer must be fully written before dimC re-reads it below,
       // which inParallel's join guarantees
       inParallel(
         () => IngestDiscovery.writeZone(dimCust, outRoot, "dwh", "dim_customer"),
-        // dim_date over the clean fact's date domain
-        // (create_dwh_tables.sql:108-125).
-        () => IngestDiscovery.writeZone(
-          Star.dimDate(clean, "o_orderdate"), outRoot, "dwh", "dim_date"))
+        () => IngestDiscovery.writeZone(observed(dimDate, obsD), outRoot, "dwh", "dim_date"))
 
       // Fact lookups resolve against the CURRENT version slice of the SCD2
       // dim — a fact loaded today points at today's version of the customer.
-      val dimC = spark.read.parquet(s"$outRoot/dwh/dim_customer")
+      val dimC = IngestDiscovery.readZone(dimCust, outRoot, "dwh", "dim_customer")
         .where(col("is_current")).select(col("c_custkey"), col("customer_key"))
       val dateKey = (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
         dayofmonth(col("o_orderdate"))).as("date_key")
@@ -227,7 +244,7 @@ object Pipeline {
           col("o_totalprice"), col("o_orderstatus"))
       val dimP = Star.withSurrogateKey(
         Tables.part(spark, sfDir).select(col("p_partkey")), "p_partkey", "part_key")
-      val line = spark.read.parquet(s"$outRoot/raw/lineitem")
+      val line = IngestDiscovery.readZone(lineitem, outRoot, "raw", "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
           col("l_partkey").as("p_partkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"))
@@ -244,23 +261,21 @@ object Pipeline {
       // partitioned-write tails instead of their sum
       val obsO = org.apache.spark.sql.Observation("fact_orders_rows")
       val obsL = org.apache.spark.sql.Observation("fact_lineitem_rows")
-      // Layout-granularity hints (guide §6, see writeFactPartitioned): the
-      // fact row counts are ALREADY KNOWN without a new pass — fact_orders
-      // is clean-grain (the quality stage's reported rows) and fact_lineitem
-      // is raw-lineitem-grain (a metadata footer count over the flat raw
-      // zone); the date-domain size is the just-written dim_date's row
-      // count (another footer-metadata count over a tiny flat zone). Two
-      // ~0.05 s metadata jobs decide between day-dir and flat-clustered
-      // layout from DATA, never from the core count.
-      val days = math.max(1L, spark.read.parquet(s"$outRoot/dwh/dim_date").count())
-      val cleanRows = reports.find(_.stage == "quality").map(_.rows)
-        .getOrElse(-1L)
-      val lineRows = spark.read.parquet(s"$outRoot/raw/lineitem").count()
+      // Layout-granularity hints (guide §6, see writeFactPartitioned), all
+      // from observations of writes that already ran — no new pass:
+      // fact_orders is clean-grain (the quality stage's rows); the raw
+      // lineitem count is an UPPER BOUND of fact_lineitem's grain (lines of
+      // error-zone orders drop out in the ordersKeyed join), which can only
+      // err toward the day-dir layout near the threshold; the date-domain
+      // size is dim_date's row count. The layout is chosen from DATA,
+      // never from the core count.
+      val days = math.max(1L, writtenRows(obsD, s"$outRoot/dwh/dim_date"))
+      val lineRows = writtenRows(obsLine, s"$outRoot/raw/lineitem")
       inParallel(
-        () => Star.writeFactPartitioned(factOrders.observe(obsO, count(lit(1)).as("n")),
+        () => Star.writeFactPartitioned(observed(factOrders, obsO),
           s"$outRoot/dwh/fact_orders", "date_key", "o_orderkey",
-          if (cleanRows < 0) -1.0 else cleanRows.toDouble / days),
-        () => Star.writeFactPartitioned(factLine.observe(obsL, count(lit(1)).as("n")),
+          cleanRows.toDouble / days),
+        () => Star.writeFactPartitioned(observed(factLine, obsL),
           s"$outRoot/dwh/fact_lineitem", "date_key", "l_orderkey",
           lineRows.toDouble / days))
       writtenRows(obsO, s"$outRoot/dwh/fact_orders") +
@@ -272,16 +287,15 @@ object Pipeline {
     // engine (raw scan + FK broadcast join + duplicate-key window) must not
     // re-run per report query.
     timed("report") {
-      val cleanZ = spark.read.parquet(s"$outRoot/clean/orders")
+      val cleanZ = IngestDiscovery.readZone(cleanOrders, outRoot, "clean", "orders")
         .withColumn("_errors", lit(""))
-      val errorZ = spark.read.parquet(s"$outRoot/error/orders")
+      val errorZ = IngestDiscovery.readZone(errorOrders, outRoot, "error", "orders")
       val zones = cleanZ.select(col("o_orderkey"), col("_errors"))
         .unionByName(errorZ.select(col("o_orderkey"), col("_errors")))
       val obsZ = org.apache.spark.sql.Observation("zone_stats_rows")
       inParallel( // disjoint report sinks — overlapped (guide §2.6)
         () => IngestDiscovery.writeZone(
-          Quality.zoneStats(zones, "orders", "o_orderkey")
-            .observe(obsZ, count(lit(1)).as("n")),
+          observed(Quality.zoneStats(zones, "orders", "o_orderkey"), obsZ),
           outRoot, "report", "zone_stats"),
         () => IngestDiscovery.writeZone(
           Quality.ruleAudit(errorZ), outRoot, "report", "rule_audit"))

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -36,8 +39,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads `<dir>/<name>.parquet` with the schema Spark's inference would
+    * produce, built from the footer [[parquetFooter]] already holds:
+    * `spark.read.parquet` without a schema launches a Spark job per read
+    * only to read that same footer. Schema merging and a failed probe
+    * keep plain inference. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val conf = spark.sessionState.conf
+    parquetFooter(spark, path).footer match {
+      case Some(f) if !conf.isParquetSchemaMergingEnabled =>
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          f, new ParquetToSparkSchemaConverter(conf))).parquet(path)
+      case _ => spark.read.parquet(path)
+    }
+  }
 
   def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
@@ -82,48 +98,48 @@ object Tables {
     * measurement shows the extra shuffle costs more than the parallelism
     * returns (+0.4-0.9s per query at sf0.1). */
   /** Spread a PROJECTION of the named table: under-parallelism is probed
-    * from the table's parquet footer ([[parquetRowGroups]]), never via
+    * from the table's parquet footer ([[parquetFooter]]), never via
     * `df.rdd` — the RDD conversion re-planned the query on every
     * invocation just to read a partition count. */
   def spread(s: SparkSession, d: String, name: String, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
-    if (parquetRowGroups(s, s"$d/$name.parquet") < target) df.repartition(target) else df
+    if (parquetFooter(s, s"$d/$name.parquet").rowGroups < target) df.repartition(target) else df
   }
-  /** Listing-based under-parallelism probe for a parquet source: row groups
-    * are parquet's unit of scan parallelism, and the count comes from the
-    * file footer — a metadata read, no plan-to-RDD conversion (which
-    * [[spread]] pays via `df.rdd` on EVERY corpus load) and no Spark job.
-    * Falls back to "assume well-split" if the path layout is unexpected. */
-  /** Per-path cache entries carry the root MODIFICATION TIME they were
+  /** Footer probe of a parquet source, read on the driver without a Spark
+    * job: row groups (parquet's unit of scan parallelism, summed over the
+    * files) for [[spread]], and the first data file's footer — the one
+    * Spark's schema inference reads — for [[load]]. A file is probed as
+    * itself, a directory as its `.parquet` children in name order.
+    *
+    * Per-path cache entries carry the root MODIFICATION TIME they were
     * probed at, so an in-session rewrite of the table re-probes instead of
-    * serving a stale count (stale entries are REPLACED, not accumulated).
+    * serving a stale entry (stale entries are REPLACED, not accumulated).
     * Caveat: the probed mtime is the ROOT's (file, or directory for
     * multi-part tables) — on object stores (S3A) directory mtime is
     * synthetic or absent, so an in-session rewrite there may still serve a
-    * stale row-group count. Perf-only (the spread repartition may be
-    * skipped once); deriving freshness from the max part-file mtime would
+    * stale entry. Deriving freshness from the max part-file mtime would
     * close it at the cost of a full listStatus per load.
     * The freshness check costs one getFileStatus per load — metadata only —
     * against `sparkContext.hadoopConfiguration` directly (building a fresh
     * SQLConf-merged Configuration per call is the expensive part, and scan
     * options don't affect a footer read). A probe FAILURE (unexpected
-    * layout, permission error) logs a warning before assuming "well-split",
-    * because that assumption silently disables the spread repartition — a
-    * perf guarantee turned off should leave a trace. */
-  private val rowGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
-  private def parquetRowGroups(s: SparkSession, path: String): Int = {
+    * layout, permission error) logs a warning and reads as "well-split, no
+    * footer": the spread repartition is skipped and [[load]] falls back to
+    * inference — a perf guarantee turned off should leave a trace. */
+  private final case class Probe(mtime: Long, rowGroups: Int, footer: Option[Footer])
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, Probe]()
+  private def parquetFooter(s: SparkSession, path: String): Probe = {
     val conf = s.sparkContext.hadoopConfiguration
     val mtime =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(conf).getFileStatus(p).getModificationTime
       } catch { case _: Exception => -1L }
-    rowGroupCache.compute(path, (p, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else (mtime, readRowGroups(conf, p)))._2
+    footerCache.compute(path, (p, prev) =>
+      if (prev != null && prev.mtime == mtime) prev else readFooters(conf, p, mtime))
   }
-  private def readRowGroups(conf: org.apache.hadoop.conf.Configuration, path: String): Int = {
+  private def readFooters(conf: org.apache.hadoop.conf.Configuration, path: String,
+                          mtime: Long): Probe = {
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
@@ -131,25 +147,27 @@ object Tables {
       val files =
         if (stat.isDirectory)
           fs.listStatus(p).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            .sortBy(_.getPath.getName)
         else Seq(stat)
-      files.map { f =>
+      // per file: (row groups, footer without its row-group metadata)
+      val probed = files.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRowGroups.size finally r.close()
-      }.sum
+        try (r.getRowGroups.size, new Footer(f.getPath,
+          new ParquetMetadata(r.getFileMetaData, java.util.Collections.emptyList())))
+        finally r.close()
+      }
+      Probe(mtime, probed.map(_._1).sum, probed.headOption.map(_._2))
     } catch {
       case e: Exception =>
         org.apache.log4j.Logger.getLogger(getClass)
-          .warn(s"row-group probe failed for $path (assuming well-split; " +
-            s"spread repartition disabled): $e")
-        Int.MaxValue
+          .warn(s"footer probe failed for $path (assuming well-split; " +
+            s"spread repartition disabled, schema inferred): $e")
+        Probe(mtime, Int.MaxValue, None)
     }
   }
-  private def spreadLoad(s: SparkSession, d: String, name: String): DataFrame = {
-    val df = load(s, d, name)
-    val target = s.sparkContext.defaultParallelism
-    if (parquetRowGroups(s, s"$d/$name.parquet") < target) df.repartition(target) else df
-  }
+  private def spreadLoad(s: SparkSession, d: String, name: String): DataFrame =
+    spread(s, d, name, load(s, d, name))
   def documents(s: SparkSession, d: String): DataFrame = spreadLoad(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = spreadLoad(s, d, "embeddings")
 }

@@ -15,90 +15,67 @@ import org.apache.spark.sql.functions._
   * Scale design: dimensions are small relative to facts, so every fact-to-dim
   * lookup is a `broadcast()` hash join — a 100 TB fact must never sort-merge
   * against a 10 MB dim. Surrogate keys are dense ranks of the natural key
-  * computed with a TWO-PHASE rank: range-repartition the distinct keys,
-  * `row_number` within each partition, then add broadcast per-partition
-  * offsets. No single-partition global window anywhere — a billion-row
-  * dimension ranks with the parallelism of `spark.sql.shuffle.partitions`.
+  * computed with a TWO-PHASE rank: bucket the keys by sampled pivots,
+  * `dense_rank` within each bucket, then add the per-bucket offsets the
+  * driver prefix-summed from the bucket counts. No single-partition global
+  * window anywhere — a billion-row dimension ranks with ~numPivots-way
+  * parallelism.
   */
 object Star {
 
   /** Attach a deterministic surrogate key: the dense rank of the natural key,
     * 1..N in natural-key order (create_dwh_tables.sql:22 IDENTITY analog).
     *
-    * Two-phase rank over DETERMINISTIC range buckets: (1) a bounded,
-    * hash-uniform pivot sample of the distinct keys (TakeOrdered by
+    * Two-phase rank over DETERMINISTIC range buckets, in three jobs:
+    * (1) a bounded, hash-uniform pivot sample of the keys (TakeOrdered by
     * xxhash64 — one map-side partial top-K pass) is collected and inlined,
     * so every row's bucket is a pure function of its key — stable under ANY
     * recomputation or stage retry, unlike `repartitionByRange`, whose
-    * sampled boundaries can differ between plan branches unless the
-    * exchange happens to be reused; (2) `row_number` ranks within each
-    * bucket (the window is partitioned — no `WindowExec: No Partition
-    * Defined`, a billion-row dimension ranks with ~numPivots-way
-    * parallelism); (3) per-bucket counts are prefix-summed via a triangular
-    * self-join over the tiny count table and broadcast back: global rank =
-    * bucket offset + local rank. The collect is bounded (numPivots keys),
-    * the same discipline as the IVF centroid literals.
+    * sampled boundaries can differ between plan branches; (2) the
+    * per-bucket distinct-key counts (at most numPivots+1 rows, the same
+    * bounded discipline as the pivots) are collected and prefix-summed on
+    * the driver into a literal offset array; (3) the consumer's own job
+    * ranks the input in place: key = offset[bucket] + `dense_rank` within
+    * the bucket. The window is partitioned by bucket — no `WindowExec: No
+    * Partition Defined`, a billion-row dimension ranks with ~numPivots-way
+    * parallelism — and there is no distinct+join-back and no global window.
+    *
+    * Duplicate keys share a rank. A null key counts once in bucket 0 and
+    * ranks first (1); the bare-key path keeps it as a row, the
+    * multi-column path drops null-key rows.
     */
   def withSurrogateKey(dim: DataFrame, naturalKey: String, keyName: String,
                        numPivots: Int = 64): DataFrame = {
     val nk = col(naturalKey)
-    val distinctKeys = dim.select(nk).distinct()
     // Deterministic pivots: the numPivots keys with smallest seeded hash —
     // a uniform sample of the key domain, collected sorted. Sampled from the
     // RAW key column (one map-side TakeOrdered stage, no distinct shuffle):
     // duplicate keys in the sample merely merge adjacent buckets, and the
     // pivot set only shapes bucket boundaries — ANY pivot set yields the
     // same ranks (offsets are computed from the actual keys) — so the
-    // sample is a performance hint, never a correctness input. For the same
-    // reason the sample is memoized per (session, canonical key plan):
-    // repeated star builds over one corpus pay the sampling job once.
-    val pivots: Array[Any] = pivotSample(dim, naturalKey, numPivots)
+    // sample is a performance hint, never a correctness input.
+    val pivots: Array[Any] = dim.select(nk).orderBy(xxhash64(lit("pivot"), nk))
+      .limit(numPivots).sort(nk).collect().map(_.get(0)).distinct
     val bucket =
       if (pivots.isEmpty) lit(0)
       else pivots.map(p => when(nk >= lit(p), 1).otherwise(0)).reduce(_ + _)
-    val keys = distinctKeys
-      .withColumn("_pid", bucket)
-      .withColumn("_rn", row_number().over(Window.partitionBy(col("_pid")).orderBy(nk)))
-    // Prefix-sum of per-partition counts via a triangular self-join over the
-    // (numPartitions)-row count table — not a global window, so the whole
-    // plan is free of unpartitioned WindowExec (asserted by StarEventsSpec).
-    // Counts come off the WINDOW OUTPUT (a bucket's max row_number IS its
-    // count): referencing _rn keeps this subtree identical to the ranked
-    // chain, so the distinct+window stage is computed once and re-read —
-    // a plain count over `keys` would prune the window and re-run the
-    // whole distinct scan as a second corpus pass at scale.
-    val counts = keys.groupBy(col("_pid")).agg(max(col("_rn")).cast("long").as("_cnt"))
-    val offsets = counts.as("a")
-      .join(broadcast(counts.as("b")), col("b._pid") < col("a._pid"), "left")
-      .groupBy(col("a._pid").as("_pid"))
-      .agg(coalesce(sum(col("b._cnt")), lit(0L)).as("_offset"))
-    val ranked = keys.join(broadcast(offsets), "_pid")
-      .select(nk, (col("_offset") + col("_rn")).cast("long").as(keyName))
-    // Joining the ranks back is only needed when the dim carries attributes
-    // beyond the key. NOTE the bare-key shortcut treats the input as a key
-    // SET: duplicate rows of a single-column input are collapsed (a
-    // dimension's key column is unique by definition). Multi-column dims
-    // keep all rows — duplicate keys share a rank, like dense_rank.
-    if (dim.columns.toSeq == Seq(naturalKey)) ranked
-    else dim.join(ranked, Seq(naturalKey))
-  }
-
-  // Pivot-sample memo: keyed by (session, canonicalized key-projection
-  // plan). Safe even under collisions or stale entries — pivots only shape
-  // bucket boundaries (see withSurrogateKey); worst case is bucket skew,
-  // never a wrong rank. Bounded: one entry per distinct dimension plan.
-  private val pivotCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Long), Array[Any]]()
-
-  private def pivotSample(dim: DataFrame, naturalKey: String,
-                          numPivots: Int): Array[Any] = {
-    val nk = col(naturalKey)
-    val proj = dim.select(nk)
-    val key = (proj.sparkSession.hashCode,
-      proj.queryExecution.analyzed.semanticHash().toLong)
-    pivotCache.computeIfAbsent(key, _ =>
-      proj.orderBy(xxhash64(lit("pivot"), nk)).limit(numPivots)
-        .sort(nk).collect().map(_.get(0)).distinct)
+    // bucket -> distinct keys in it (null included, once), at most
+    // pivots.length + 1 rows; offsets(b) = keys in the buckets below b
+    val counts = dim.select(bucket.as("_pid"), nk).distinct()
+      .groupBy(col("_pid")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val offsets = (0 until pivots.length).scanLeft(0L)((acc, b) => acc + counts.getOrElse(b, 0L))
+    val pid = col("_pid")
+    val rank = (typedLit(offsets.toArray).getItem(pid) +
+      dense_rank().over(Window.partitionBy(pid).orderBy(nk))).cast("long").as(keyName)
+    // NOTE the bare-key shortcut treats the input as a key SET: duplicate
+    // rows of a single-column input are collapsed (a dimension's key column
+    // is unique by definition). Multi-column dims keep all rows.
+    val rest = dim.columns.toSeq.filter(_ != naturalKey).map(col)
+    val keyed = (if (rest.isEmpty) dim.distinct() else dim)
+      .select(nk +: rest :+ bucket.as("_pid"): _*)
+      .select(nk +: rest :+ rank: _*)
+    if (rest.isEmpty) keyed else keyed.where(nk.isNotNull)
   }
 
   /** Date dimension derived from a date-typed column's domain
@@ -140,10 +117,11 @@ object Star {
     * init and per-dir listing dominate the whole write (~2.4-3.0 s per
     * fact at sf0.1 for 2,400 × ~3 KB files) while pruning saves nothing (a
     * whole such "table" is smaller than ONE well-sized file). Below the
-    * threshold the fact is therefore written FLAT but RANGE-CLUSTERED on
-    * the date key (range repartition + within-file sort), so parquet
-    * min/max stats give readers the same date skipping at file granularity
-    * — the guide's "partition by low-cardinality columns ... within files,
+    * threshold the fact is therefore written FLAT but HASH-CLUSTERED on
+    * the date key (hash repartition + within-partition sort on (date,
+    * key)), so parquet row-group min/max stats give readers date skipping
+    * at row-group granularity (a file holds a few whole dates, not a date
+    * range) — the guide's "partition by low-cardinality columns ... within files,
     * sort by a commonly filtered column" rule applied to each regime.
     * `rowsPerDayHint < 0` (unknown) keeps the conservative day-dir layout.
     * The threshold is a session conf (scale-dependent settings stay

@@ -982,7 +982,7 @@ object TextAnalysis {
     * step before sequence packing: every document gets a stable
     * pseudo-random global position 1..N by ranking md5(id). The rank runs
     * through the two-phase bucket rank ([[Star.withSurrogateKey]]):
-    * partitioned windows + broadcast prefix offsets, never a
+    * bucket-partitioned windows + driver-summed bucket offsets, never a
     * single-partition global window — a 100 TB corpus shuffles with full
     * parallelism. The digest is suffixed with the id so the order is total
     * even under md5 collisions; no RNG, so the permutation is identical on

@@ -80,6 +80,21 @@ object IngestDiscovery {
     path
   }
 
+  /** Re-read a parquet zone (`<root>/<zone>/<entity>`) that `written` was
+    * just written to, with the writer's schema instead of an inferred one:
+    * `spark.read.parquet` without a schema launches a footer-reading Spark
+    * job per read only to rediscover a schema the caller already holds.
+    * Spark makes a file relation's data schema nullable either way, so the
+    * result's schema equals the inferred one. `partitionedBy` names the
+    * writer's `partitionBy` columns; like inference, they come last. */
+  def readZone(written: DataFrame, zoneRoot: String, zone: String, entity: String,
+               partitionedBy: Seq[String] = Nil): DataFrame = {
+    val s = written.schema
+    val schema = StructType(
+      s.fields.filterNot(f => partitionedBy.contains(f.name)) ++ partitionedBy.map(s(_)))
+    written.sparkSession.read.schema(schema).parquet(s"$zoneRoot/$zone/$entity")
+  }
+
   /** Attach the raw-zone metadata columns (STEP2_RAW_CONSUMER.py's
     * `_source/_extract_time/_run_id`). `extractTime` is supplied by the
     * caller so reruns are reproducible (the reference stamps now()). */

@@ -2,8 +2,47 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Every zone Pipeline.runAll writes. */
+  private val dwhZones = Seq("raw/orders", "raw/customer", "raw/lineitem", "clean/orders",
+    "error/orders", "dwh/dim_customer", "dwh/dim_date", "dwh/fact_orders",
+    "dwh/fact_lineitem", "report/zone_stats", "report/rule_audit")
+
+  /** Stage names of every job that starts without a SQL execution id while
+    * `body` runs. Spark's parquet schema inference (`spark.read.parquet`
+    * without a schema) is exactly this class of job. */
+  private def jobsWithoutSqlExecution(body: => Unit): Seq[String] = {
+    val marker = "graft.spec.marker"
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty(marker) != null)) markerSeen.countDown()
+        else if (props.forall(_.getProperty("spark.sql.execution.id") == null))
+          found.add(e.stageInfos.map(_.name).mkString(", "))
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, so has the start of every job `body` launched
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(l)
+    found.asScala.toSeq
+  }
 
   test("runAll drives stage -> quality -> DWH end-to-end with a run report") {
     val out = Files.createTempDirectory("graft_pipe").toFile.getAbsolutePath
@@ -34,9 +73,10 @@ class PipelineSpec extends SparkSpec {
     // DWH layout is granularity-ADAPTIVE (round 20): at sf0.001 rows/day is
     // far below spark.graft.fact.minRowsPerDay, so the facts are written
     // FLAT (no date_key= dirs — the day-dir layout would be thousands of
-    // sub-KB files) but still carry date_key as a data column, range-
-    // clustered for parquet min/max skipping. The at-scale day-dir shape is
-    // pinned by the dedicated writeFactPartitioned test below.
+    // sub-KB files) but still carry date_key as a data column, hash-
+    // clustered with a within-partition sort for parquet row-group min/max
+    // skipping. The at-scale day-dir shape is pinned by the dedicated
+    // writeFactPartitioned test below.
     for (f <- Seq("fact_orders", "fact_lineitem")) {
       val parts = new java.io.File(s"$out/dwh/$f").listFiles()
         .filter(_.isDirectory).map(_.getName)
@@ -56,7 +96,63 @@ class PipelineSpec extends SparkSpec {
     assert(fact.join(dimDate, Seq("date_key"), "left_anti").count() == 0)
   }
 
-  test("writeFactPartitioned: day dirs at scale, flat range-clustered below the threshold") {
+  test("Tables.load reads every source with the schema inference would give") {
+    for (t <- Tables.names)
+      assert(Tables.load(spark, sf, t).schema == spark.read.parquet(s"$sf/$t.parquet").schema, t)
+  }
+
+  test("neither pipeline launches a job outside a SQL execution (no schema inference)") {
+    val dwh = Files.createTempDirectory("graft_pipe_jobs").toFile.getAbsolutePath
+    val corpus = Files.createTempDirectory("graft_corpus_jobs").toFile.getAbsolutePath
+    val docs = (1L to 12L).map(i =>
+      (i, (1 to 40).map(j => s"w${(i * j) % 17}x$j").mkString(" "), if (i % 2 == 0) "a" else "b"))
+      .toDF("doc_id", "text", "source")
+    val stray = jobsWithoutSqlExecution {
+      Pipeline.runAll(spark, sf, dwh, "run_jobs").collect()
+      CorpusPipeline.runAll(spark, docs, corpus, "run_jobs",
+        minTokens = 10, minStopRatio = 0.0, maxDupFraction = 0.9,
+        capPerSource = 5, numShards = 2,
+        spanScrub = Some(4), bpeMerges = Some(6), pplBuckets = Some(2)).collect()
+    }
+    assert(stray.isEmpty, s"jobs without a SQL execution id: ${stray.mkString("; ")}")
+  }
+
+  test("lineage mode (spark.graft.localCheckpoint=false) writes the same DWH zones") {
+    val ckpt = Files.createTempDirectory("graft_pipe_ckpt").toFile.getAbsolutePath
+    val lineage = Files.createTempDirectory("graft_pipe_lineage").toFile.getAbsolutePath
+    Pipeline.runAll(spark, sf, ckpt, "run_ln").collect()
+    spark.conf.set("spark.graft.localCheckpoint", "false")
+    try Pipeline.runAll(spark, sf, lineage, "run_ln").collect()
+    finally spark.conf.unset("spark.graft.localCheckpoint")
+    for (z <- dwhZones) {
+      val a = spark.read.parquet(s"$ckpt/$z")
+      val b = spark.read.parquet(s"$lineage/$z")
+      assert(a.schema == b.schema, z)
+      assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, z)
+    }
+    // the surrogate keys of both checkpointed dims took part
+    assert(spark.read.parquet(s"$ckpt/dwh/dim_customer").columns.contains("customer_key"))
+    assert(spark.read.parquet(s"$ckpt/dwh/fact_lineitem").columns.contains("part_key"))
+  }
+
+  test("concurrent first actions over a lazy checkpoint compute each row once") {
+    import org.apache.spark.sql.functions._
+    import graft.Ckpt.CkptOps
+    // the quality stage's shape: clean and error writes overlap via
+    // inParallel over the lazily checkpointed rule-engine output
+    val evals = spark.sparkContext.longAccumulator("rule_evals")
+    val rule = udf { (x: Long) => evals.add(1); x }
+    val annotated = spark.range(0, 20000, 1, 8).select(rule(col("id")).as("id")).ckptLocalLazy()
+    val out = Files.createTempDirectory("graft_lazy_par").toFile.getAbsolutePath
+    Pipeline.inParallel(
+      () => annotated.where(col("id") % 2 === 0).write.parquet(s"$out/even"),
+      () => annotated.where(col("id") % 2 =!= 0).write.parquet(s"$out/odd"))
+    assert(evals.value == 20000L)
+    assert(spark.read.parquet(s"$out/even").count() + spark.read.parquet(s"$out/odd").count() ==
+      20000L)
+  }
+
+  test("writeFactPartitioned: day dirs at scale, flat hash-clustered below the threshold") {
     import org.apache.spark.sql.functions._
     val fact = spark.range(0, 600).select(
       col("id").as("k"),

@@ -41,8 +41,10 @@ class SourceGuardSpec extends AnyFunSpec {
     // 18's pcaPowerFixed covariance-triangle collect (the same
     // dimension-bounded pcaTrain class, require-gated at d <= 1024)
     "graft/operators/Similarity.scala" -> 6,
-    // Star: 64-key pivot-value collect with a loud limit
-    "graft/operators/Star.scala" -> 1)
+    // Star (withSurrogateKey): the numPivots-key pivot-value collect
+    // with a loud limit, and the per-bucket distinct-key counts — one row
+    // per bucket, at most numPivots + 1 rows, prefix-summed on the driver
+    "graft/operators/Star.scala" -> 2)
 
   private val crossJoinBudget = Map(
     // all 1-row broadcast stats/corpus-total joins ... plus ksBySource's

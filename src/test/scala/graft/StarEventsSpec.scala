@@ -48,6 +48,18 @@ class StarEventsSpec extends SparkSpec {
     assert(unpartitioned.isEmpty, "surrogate-key plan must not contain a global window")
   }
 
+  test("withSurrogateKey: a null key counts once and ranks first; multi-column drops its rows") {
+    val bare = Seq(Some(30), None, Some(10), Some(20), None, Some(10)).toDF("nk")
+    val b = Star.withSurrogateKey(bare, "nk", "sk").as[(Option[Int], Long)].collect()
+    assert(b.sortBy(_._2).toSeq == Seq((None, 1L), (Some(10), 2L), (Some(20), 3L), (Some(30), 4L)))
+    val multi = Seq((Some(30), "c"), (None, "n"), (Some(10), "a"), (Some(20), "b"),
+      (Some(10), "a2")).toDF("nk", "attr")
+    val keyed = Star.withSurrogateKey(multi, "nk", "sk")
+    assert(keyed.columns.toSeq == Seq("nk", "attr", "sk"))
+    val m = keyed.as[(Int, String, Long)].collect().sortBy(r => (r._3, r._2))
+    assert(m.toSeq == Seq((10, "a", 2L), (10, "a2", 2L), (20, "b", 3L), (30, "c", 4L)))
+  }
+
   test("star_fact plan is free of unpartitioned windows (single-partition sort killer)") {
     val df = SparkEntry.queries("star_fact")(spark, "/root/testdata/sf0.001")
     val unpartitioned = df.queryExecution.optimizedPlan.collect {
