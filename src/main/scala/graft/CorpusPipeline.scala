@@ -18,12 +18,18 @@ import graft.sources.IngestDiscovery
   *     attach staged metadata, write the raw zone.
   *  2. `quality_gate` — composite gate ([[TextAnalysis.corpusGate]]):
   *     too-short / low-stopword / repetitive docs to the rejected zone with
-  *     reasons, survivors to the gated zone.
+  *     reasons, survivors to the gated zone. The gate is one map-side
+  *     projection carrying the raw columns; both zones filter it on the
+  *     verdict — no checkpointed verdict table, no join back to raw.
   *  3. `source_cap`   — at most `capPerSource` docs per source
   *     (deterministic md5 rank) so no source dominates the mixture.
-  *  4. `dedup`        — exact dedup (keep min id per normalized text), then
-  *     MinHash-LSH near-dup pairs → connected components → keep cluster
-  *     representatives. Survivors to the dedup zone.
+  *  4. `dedup`        — exact dedup (keep min id per normalized text, one
+  *     window), then MinHash-LSH near-dup pairs → connected components →
+  *     keep cluster representatives. Survivors to the dedup zone. The
+  *     components come from one of two carriers
+  *     ([[Dedup.nearDupClusters]]): union-find on the driver while the
+  *     observed edge count is under its bound (the usual case — near-dup
+  *     graphs are sparse), distributed min-label rounds past it.
   *  4b. `span_scrub`  — OPTIONAL (`spanScrub = Some(spanTokens)`):
   *     [[Dedup.spanDedup]] rewrites each surviving document keeping only
   *     the corpus-first occurrence of every aligned token span (the
@@ -53,8 +59,10 @@ import graft.sources.IngestDiscovery
   *     layout write of the final corpus.
   *
   * Every stage is deterministic (md5 ranks, min-id representatives — no
-  * RNG), so reruns produce byte-identical zones. Each stage re-reads its
-  * predecessor's zone with the writer's schema
+  * RNG), so reruns produce byte-identical zones. Counts and flags a stage
+  * needs mid-flight (vocabulary and edge sizes, convergence) are observed
+  * on the checkpoint that materializes them, never read by a second job.
+  * Each stage re-reads its predecessor's zone with the writer's schema
   * ([[IngestDiscovery.readZone]]), so no read launches a
   * schema-inference job. Returns the run report
   * as (stage, rows, seconds).
@@ -114,23 +122,23 @@ object CorpusPipeline {
       IngestDiscovery.staged(canon, "corpus", runId, extractTime)
     }
 
-    // 2. quality gate: keep/reject split with reasons. The gate verdict
-    // table is doc_id-sized — localCheckpoint materializes it ONCE so the
-    // rejected and gated writes don't each re-run the whole token-stats
-    // subtree (two full gate computes measured as twin stages in r19's
-    // per-job profile).
+    // 2. quality gate: keep/reject split with reasons. The gate is one
+    // map-side projection over the raw zone carrying every raw column, so
+    // each zone is a filter of it on the verdict — no verdict table, no
+    // join back. Recomputing the projection per write costs less than
+    // materializing it.
     var gatedOut: DataFrame = null
     timed("quality_gate") {
+      val rest = raw.columns.toSeq.filter(_ != "doc_id")
       val gate = TextAnalysis.corpusGate(raw, "doc_id", "text",
-          minTokens, minStopRatio, maxDupFraction)
-        .select("doc_id", "keep", "_reasons").ckptLocal()
-      gatedOut = raw.join(gate.where(col("keep")).select("doc_id"), "doc_id")
-      // the reject/keep writes consume the materialized gate table and
-      // write disjoint zones — overlapped (guide §2.6)
+        minTokens, minStopRatio, maxDupFraction, carry = rest)
+      val zoneCols = ("doc_id" +: rest).map(col)
+      gatedOut = gate.where(col("keep")).select(zoneCols: _*)
+      // the reject/keep writes are disjoint zones — overlapped (guide §2.6)
       val o = obsCount("quality_gate")
       Pipeline.inParallel(
         () => IngestDiscovery.writeZone(
-          raw.join(gate.where(!col("keep")).select("doc_id", "_reasons"), "doc_id"),
+          gate.where(!col("keep")).select(zoneCols :+ col("_reasons"): _*),
           outRoot, "rejected", "documents"),
         () => IngestDiscovery.writeZone(gatedOut.observe(o, count(lit(1)).as("n")),
           outRoot, "gated", "documents"))
@@ -173,11 +181,8 @@ object CorpusPipeline {
     var deduped = stage("dedup", "deduped") {
       // exact survivors feed THREE consumers (minhash pairs, cluster
       // labels, the final write) — localCheckpoint materializes the
-      // exact-dedup join once instead of re-running the content-hash
-      // groupBy per consumer.
-      val exactKeep = Dedup.exactDedupByHash(capped, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"))
-      val exact = capped.join(exactKeep, "doc_id").ckptLocal()
+      // exact-dedup window once instead of re-running it per consumer.
+      val exact = Dedup.exactDedupSurvivors(capped, "doc_id", "text").ckptLocal()
       val pairs = Dedup.nearDupMinHash(exact, "doc_id", "text",
         shingleN = 3, threshold = nearDupThreshold)
       val reps = Dedup.nearDupClusters(exact, pairs, "doc_id")
@@ -233,8 +238,8 @@ object CorpusPipeline {
     pplBuckets.foreach { k =>
       val in = deduped
       deduped = stage("ppl_buckets", "ppl") {
-        val lm = TextAnalysis.lmScore(in, "doc_id", "text")
-        val scored = in.select(col("doc_id"), col(pplStratum)).join(lm, "doc_id")
+        // the stratum rides the LM's aggregation keys — no join back
+        val scored = TextAnalysis.lmScore(in, "doc_id", "text", carry = Seq(pplStratum))
         val buckets = graft.operators.Analytics.ntileBuckets(scored,
             col(pplStratum), col("avg_logprob"), col("doc_id"), k)
           .select(col("id").as("doc_id"), col("bucket").as("ppl_bucket"))
@@ -242,12 +247,13 @@ object CorpusPipeline {
       }
     }
 
-    // 5. token-balanced shards, laid out one directory per shard
+    // 5. token-balanced shards, laid out one directory per shard; the
+    // documents ride through the assignment — no join back
     timed("shard_write") {
       val o = obsCount("shard_write")
-      deduped.join(
-          TextAnalysis.shardTokenBudget(deduped, "doc_id", "text", numShards)
-            .select("doc_id", "shard"), "doc_id")
+      val rest = deduped.columns.toSeq.filter(_ != "doc_id")
+      TextAnalysis.shardTokenBudget(deduped, "doc_id", "text", numShards, carry = rest)
+        .select((("doc_id" +: rest) :+ "shard").map(col): _*)
         .observe(o, count(lit(1)).as("n"))
         .write.mode("overwrite").partitionBy("shard")
         .parquet(s"$outRoot/shards/documents")

@@ -69,25 +69,15 @@ object Pipeline {
 
   /** Rows a just-finished write produced, from its `df.observe(obs, count)`
     * metric — the production write-metrics pattern (r19 Finding 2): never
-    * re-read/re-list a freshly written zone just to count it. `obs.get`
-    * blocks until the ASYNC execution-listener event lands, so the wait is
-    * bounded on a daemon thread (interrupted on timeout — ADVICE r19) and a
-    * lost event degrades to the honest read-back count. */
+    * re-read/re-list a freshly written zone just to count it. The metric
+    * arrives with an ASYNC execution-listener event, so the wait on the
+    * observation's future is bounded ([[Ckpt.observed]]) and a lost event
+    * degrades to the honest read-back count. */
   private[graft] def writtenRows(spark: SparkSession,
                                  obs: org.apache.spark.sql.Observation,
-                                 path: String): Long = {
-    val p = new java.util.concurrent.CompletableFuture[Long]()
-    val t = new Thread(() =>
-      try p.complete(obs.get("n").asInstanceOf[Long])
-      catch { case e: Throwable => p.completeExceptionally(e) })
-    t.setDaemon(true)
-    t.start()
-    try p.get(30, java.util.concurrent.TimeUnit.SECONDS)
-    catch { case _: Exception =>
-      t.interrupt()
-      spark.read.parquet(path).count()
-    }
-  }
+                                 path: String): Long =
+    Ckpt.observed(obs).map(_.getAs[Long]("n"))
+      .getOrElse(spark.read.parquet(path).count())
 
   def runAll(spark: SparkSession, sfDir: String, outRoot: String,
              runId: String, extractTime: String = "2026-01-01 00:00:00"): DataFrame = {

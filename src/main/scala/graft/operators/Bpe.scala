@@ -144,14 +144,15 @@ object Bpe {
   private def trainUncached(docs: DataFrame, textCol: String, numMerges: Int,
                             endOfWord: String, minPairCount: Long,
                             driverVocabBound: Long): Seq[(String, String)] = {
-    val words = docs
+    // the vocabulary size is observed on the checkpoint's own action — no
+    // separate count job over the materialized blocks
+    val (words, vocabSize) = graft.Ckpt.localObserved(docs
       .select(explode(tokens(col(textCol))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .select(charSymbols(col("word"), endOfWord).as("symbols"), col("freq"))
-      .ckptLocal()
-    // the checkpoint is already materialized, so this count is metadata-cheap
-    if (words.count() <= driverVocabBound) {
+      .select(charSymbols(col("word"), endOfWord).as("symbols"), col("freq")),
+      count(lit(1)))
+    if (vocabSize <= driverVocabBound) {
       lastTrainCarrier = "driver"
       val vocab = words.collect().map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
       trainDriver(vocab, numMerges, minPairCount)

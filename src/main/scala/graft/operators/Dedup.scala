@@ -39,6 +39,19 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
       .select(col("keep_id"), col("n_copies"))
 
+  /** Exact-dedup SURVIVORS: the rows of `docs` whose id is the minimum of
+    * their (xxhash64(norm), norm) group — [[exactDedupByHash]]'s keep_id
+    * set joined back to the documents, in one window over the same key
+    * instead of a groupBy plus a join. Columns and their order are those
+    * of `docs`. */
+  def exactDedupSurvivors(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val norm = normText(col(textCol))
+    val byText = org.apache.spark.sql.expressions.Window.partitionBy(xxhash64(norm), norm)
+    docs.withColumn("_keep_id", min(col(idCol)).over(byText))
+      .where(col(idCol) === col("_keep_id"))
+      .drop("_keep_id")
+  }
+
   /** Cluster-size histogram: how many duplicate clusters of each size. */
   def dedupStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     exactDedup(docs, idCol, textCol)
@@ -256,11 +269,12 @@ object Dedup {
     def grams(df: DataFrame) = df.select(
       col(idCol).as("train_id"),
       explode(array_distinct(TextAnalysis.ngramsAll(tokens(col(textCol)), n))).as("gram"))
-    // The bench gram set is read three times (sizing count, Bloom build,
-    // exact semi-join) — materialize it once; it is the bounded small side.
-    val benchGrams = grams(benchmark).select(col("gram")).distinct().ckptLocal()
+    // The bench gram set is read twice (Bloom build, exact semi-join) —
+    // materialize it once; it is the bounded small side. Its size sizes
+    // the Bloom filter and is observed on the checkpoint's own action.
     // Bounded by the benchmark's distinct gram count; ~1.2 bytes/item at 3% fpp.
-    val nBench = benchGrams.count()
+    val (benchGrams, nBench) = graft.Ckpt.localObserved(
+      grams(benchmark).select(col("gram")).distinct(), count(lit(1)))
     val bf = benchGrams.stat.bloomFilter("gram", math.max(nBench, 1L), bloomFpp)
     val bfBc = train.sparkSession.sparkContext.broadcast(bf)
     grams(train)
@@ -275,20 +289,38 @@ object Dedup {
     * gets `cluster_id` = the smallest doc id reachable through near-dup
     * pairs, and `kept` marks the cluster representative — the step that
     * turns pairwise near-dup OUTPUT into an actual dedup decision (keep one
-    * doc per cluster).
+    * doc per cluster). Pair endpoints are ids of `docs`. Output:
+    * (doc_id, cluster_id, kept), one row per document.
     *
-    * Min-label propagation: each round, a node's label becomes the minimum
-    * of its own and its neighbors' labels. Propagation stops as soon as a
-    * round changes nothing (the fixpoint — one stable round implies global
-    * convergence since each round is a deterministic function of the label
-    * table), so `rounds` is a safety cap on pathological diameters, not a
-    * cost: shallow near-dup graphs exit after 2-3 rounds. Both the edge set and the
-    * per-round labels are `localCheckpoint`ed: iterative plans otherwise
-    * re-derive the whole LSH candidate lineage once per round and the DAG
-    * grows without bound — the standard Spark iterative-graph discipline.
-    * One shuffle per round, keyed on the 8-byte node id. */
+    * The symmetric edge table is `localCheckpoint`ed (the LSH candidate
+    * lineage runs once) and its size is observed on that checkpoint's own
+    * action. Two carriers then label the nodes:
+    *
+    *  - **Driver union-find** (integral ids and at most `driverEdgeBound`
+    *    edges, [[DriverEdgeBound]] by default — the Bpe
+    *    `driverVocabBound` discipline): the `src < dst` half collects to
+    *    the driver, union-find with the smaller root winning labels every
+    *    non-singleton node with its component minimum, and the documents
+    *    left-join that (node, label) table as a broadcast local relation
+    *    (singletons label themselves). One collect instead of a job chain
+    *    per round.
+    *  - **Distributed min-label propagation** (string ids, or edges past
+    *    the bound): each round a node's label becomes the minimum of its
+    *    own and its neighbors' labels. Labels start as the identity, so
+    *    round 1 is just each node's minimum neighbor. Propagation stops as
+    *    soon as a round changes nothing — read from an observed
+    *    `sum(_changed)` on the round's checkpoint, no separate job — and
+    *    `rounds` caps pathological diameters (shallow near-dup graphs exit
+    *    after 2-3 rounds). Each round is `localCheckpoint`ed: iterative
+    *    plans otherwise re-derive the whole lineage per round and the DAG
+    *    grows without bound. One shuffle per round, keyed on the node id.
+    *
+    * Both carriers compute the same component minima whenever propagation
+    * converges within `rounds` (spec-pinned on chains, stars, singletons);
+    * union-find always reaches the fixpoint. */
   def nearDupClusters(docs: DataFrame, pairs: DataFrame, idCol: String,
-                      rounds: Int = 20): DataFrame = {
+                      rounds: Int = 20,
+                      driverEdgeBound: Long = DriverEdgeBound): DataFrame = {
     // Integral doc ids propagate as 8-byte longs (the compact shuffle key);
     // every other type is carried NATIVELY — min-label propagation only
     // needs an ordering, and an unconditional cast("long") throws under
@@ -301,33 +333,71 @@ object Dedup {
       case _ => false
     }
     def asKey(c: Column): Column = if (integral) c.cast("long") else c
-    val edges = pairs
-      .select(asKey(col("doc_a")).as("src"), asKey(col("doc_b")).as("dst"))
-      .unionByName(pairs.select(asKey(col("doc_b")).as("src"),
-        asKey(col("doc_a")).as("dst")))
-      .ckptLocal()
-    var labels = docs.select(asKey(col(idCol)).as("node"))
-      .withColumn("label", col("node"))
-    var i = 0
-    var converged = false
-    while (i < rounds && !converged) {
-      val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("node")).agg(min(col("label")).as("_nl"))
-      val next = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("_nl"), col("label"))).as("label"),
-          (coalesce(col("_nl"), col("label")) < col("label")).as("_changed"))
-        .ckptLocal()
-      // Rounds are eager anyway (localCheckpoint); a cheap count on the
-      // checkpointed result lets converged graphs skip the remaining rounds
-      // (near-dup clusters are shallow — usually 1-2 rounds suffice).
-      converged = next.where(col("_changed")).limit(1).isEmpty
-      labels = next.drop("_changed")
-      i += 1
-    }
+    val (edges, nEdges) = graft.Ckpt.localObserved(
+      pairs.select(asKey(col("doc_a")).as("src"), asKey(col("doc_b")).as("dst"))
+        .unionByName(pairs.select(asKey(col("doc_b")).as("src"),
+          asKey(col("doc_a")).as("dst"))),
+      count(lit(1)))
+    val nodes = docs.select(asKey(col(idCol)).as("node"))
+    val labels =
+      if (integral && nEdges <= driverEdgeBound) {
+        val half = edges.where(col("src") < col("dst")).collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        val local = docs.sparkSession.createDataFrame(componentMinima(half).toSeq)
+          .toDF("node", "_label")
+        nodes.join(broadcast(local), Seq("node"), "left")
+          .select(col("node"), coalesce(col("_label"), col("node")).as("label"))
+      } else {
+        // round 1: labels start as the identity, so each node's minimum
+        // neighbor label is its minimum neighbor id
+        var nbrMin = edges.groupBy(col("src").as("node")).agg(min(col("dst")).as("_nl"))
+        var labels = nodes.withColumn("label", col("node"))
+        var i = 0
+        var converged = false
+        while (i < rounds && !converged) {
+          val (next, changed) = graft.Ckpt.localObserved(
+            labels.join(nbrMin, Seq("node"), "left")
+              .select(col("node"),
+                least(col("label"), coalesce(col("_nl"), col("label"))).as("label"),
+                (coalesce(col("_nl"), col("label")) < col("label")).as("_changed")),
+            sum(col("_changed").cast("long")))
+          converged = changed == 0L
+          labels = next.drop("_changed")
+          nbrMin = edges
+            .join(labels.select(col("node").as("dst"), col("label")), "dst")
+            .groupBy(col("src").as("node")).agg(min(col("label")).as("_nl"))
+          i += 1
+        }
+        labels
+      }
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
       (col("node") === col("label")).as("kept"))
+  }
+
+  /** Edge-count ceiling for [[nearDupClusters]]' driver union-find: at or
+    * under this many directed edges (each pair counts twice) the pair half
+    * collects to the driver — ~16 bytes a pair, plus a (node, label) local
+    * relation of at most twice as many rows; past it, labels propagate in
+    * distributed rounds. */
+  val DriverEdgeBound: Long = 1000000L
+
+  /** Union-find over undirected edges: every node that has an edge, mapped
+    * to the smallest node id in its component. */
+  private[graft] def componentMinima(edges: Array[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // snapshot the keys: find() compresses paths in place
+    parent.keys.toArray.map(k => k -> find(k)).toMap
   }
 
   /** Span-level exact dedup — the "deduplicating training data" substring

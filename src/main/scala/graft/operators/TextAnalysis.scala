@@ -426,20 +426,20 @@ object TextAnalysis {
     // backward-fan aggregation, AND the 1-row type-count broadcast — the
     // broadcast/stat builds replay a checkpoint scan, not the corpus agg
     // (the r17 AQE broadcast-build lesson).
-    val types = tf.groupBy(col("bigram")).agg(sum(col("tf")).as("cnt_bi"))
-      .withColumn("_w2", split(col("bigram"), " ").getItem(1))
-      .ckptLocal()
+    val (types, nTypes) = graft.Ckpt.localObserved(
+      tf.groupBy(col("bigram")).agg(sum(col("tf")).as("cnt_bi"))
+        .withColumn("_w2", split(col("bigram"), " ").getItem(1)),
+      count(lit(1)))
     val wCtx = org.apache.spark.sql.expressions.Window
       .partitionBy(split(col("bigram"), " ").getItem(0))
     // N1+(·w) = type count per second word — a _w2-partitioned window over
     // the SAME type table (r20: replaces the grouped-count-joined-back shape,
     // whose AQE broadcast build was a separate scheduled job per run, with
     // one exchange and ZERO joins — identical integers). N1+(··) is the
-    // checkpointed type table's row count, inlined as a literal (the count
-    // reads materialized blocks — metadata-cheap) instead of a 1-row
-    // aggregate riding a broadcast crossJoin build.
+    // checkpointed type table's row count, observed on the checkpoint's own
+    // action and inlined as a literal, instead of a 1-row aggregate riding
+    // a broadcast crossJoin build.
     val w2w = org.apache.spark.sql.expressions.Window.partitionBy(col("_w2"))
-    val nTypes = types.count()
     val probs = types
       .withColumn("cnt_ctx", sum(col("cnt_bi")).over(wCtx))
       .withColumn("n1_fwd", count(lit(1)).over(wCtx))
@@ -522,11 +522,11 @@ object TextAnalysis {
     // ride two pair-table exchanges inside the main query. N1+(··) is the
     // checkpointed pair table's row count inlined as a literal. Identical
     // integers everywhere, so the probability expression is bit-unchanged.
-    val g23 = types.groupBy(col("_w2"), col("_w3"))
-      .agg(count(lit(1)).as("n1_mid")).ckptLocal()
+    val (g23, nPairs) = graft.Ckpt.localObserved(
+      types.groupBy(col("_w2"), col("_w3")).agg(count(lit(1)).as("n1_mid")),
+      count(lit(1)))
     val w2w = org.apache.spark.sql.expressions.Window.partitionBy(col("_w2"))
     val w3w = org.apache.spark.sql.expressions.Window.partitionBy(col("_w3"))
-    val nPairs = g23.count()
     val pairStats = g23
       .withColumn("n1_dot2dot", sum(col("n1_mid")).over(w2w))
       .withColumn("n1_w2dot", count(lit(1)).over(w2w))
@@ -1029,35 +1029,64 @@ object TextAnalysis {
     * ([[Quality.annotate]]: one pass, ordered reason strings, clean/error
     * split) applied to training documents: too-short, low-stopword-ratio,
     * and repetitive docs are flagged with a ` | `-joined reasons column and
-    * a keep decision. Signals reuse [[textQuality]] and
-    * [[repetitionFilter]] (docs too short to produce bigrams carry
-    * dup_fraction 0); all thresholds compare the 6dp-ROUNDED signals, so
-    * the boundary behaves identically in any engine. */
-  /** `repetition`: caller-supplied [[repetitionFilter]] output (same
-    * idCol, any extra columns ignored). A pipeline that already ran the
-    * repetition pass over this corpus hands it in and the gate skips its
-    * own all-ngrams explode — one fewer full corpus pass; the n-gram
-    * explode is the gate's dominant cost at scale. Default recomputes
-    * (bigrams, the reference signal), byte-identical output either way
-    * (spec-pinned). */
+    * a keep decision. Signals are [[textQuality]]'s token count and
+    * stopword ratio and [[repetitionFilter]]'s bigram `dup_gram_fraction`
+    * (docs too short to produce bigrams carry dup_fraction 0); all
+    * thresholds compare the 6dp-ROUNDED signals, so the boundary behaves
+    * identically in any engine.
+    *
+    * Default path: ONE projection, no shuffle, no join. A doc of n ≥ 2
+    * tokens has n − 1 bigrams and `size(shingles(tokens, 2))` distinct
+    * ones (the native distinct-shingle expression), which is exactly the
+    * count repetitionFilter's explode + two groupBys derive — the same
+    * value, spec-pinned against that path on empty, 1-/2-token, null,
+    * tab/leading-whitespace and all-repeated-bigram docs. Document ids are
+    * keys: the join path matches signals by id, this one per row.
+    *
+    * `repetition`: caller-supplied [[repetitionFilter]] output (same
+    * idCol, any extra columns ignored), joined on the id — for a pipeline
+    * that already ran the repetition pass over this corpus.
+    *
+    * `carry` names per-document columns to ride through to the output
+    * (between the id and the signals), so a caller splitting its corpus
+    * on the verdict needs no join back to it.
+    * Output: (id, carry..., n_tokens, stop_ratio, dup_fraction, _reasons,
+    * keep). */
   def corpusGate(docs: DataFrame, idCol: String, textCol: String,
                  minTokens: Int, minStopRatio: Double,
                  maxDupFraction: Double,
-                 repetition: Option[DataFrame] = None): DataFrame = {
-    val q = textQuality(docs, idCol, textCol)
-      .select(col(idCol), col("n_tokens"), col("stop_ratio"))
-    val r = repetition
-      .getOrElse(repetitionFilter(docs, idCol, textCol, 2, maxDupFraction))
-      .select(col(idCol), col("dup_gram_fraction"))
-    q.join(r, Seq(idCol), "left")
-      .withColumn("dup_fraction", coalesce(col("dup_gram_fraction"), lit(0.0)))
+                 repetition: Option[DataFrame] = None,
+                 carry: Seq[String] = Nil): DataFrame = {
+    val outs = Seq("n_tokens", "stop_ratio", "dup_fraction", "_reasons", "keep")
+    require(!carry.exists((outs ++ Seq("_toks", "dup_gram_fraction", idCol)).contains),
+      s"carry collides with corpusGate internals: $carry")
+    val keys = col(idCol) +: carry.map(col)
+    // the token array lands in its own projection so the split runs once
+    // per row, not once per signal
+    val toks = col("_toks")
+    val n = size(toks)
+    val quality = keys ++ Seq(n.as("n_tokens"),
+      round(wordSetCount(toks, EnStop).cast("double") / n.cast("double"), 6).as("stop_ratio"))
+    val tokenized = docs.select(keys :+ tokens(col(textCol)).as("_toks"): _*)
+    val signals = repetition match {
+      case None =>
+        // coalesce keeps the join path's non-null dup_fraction type
+        val dup = round((n - 1 - size(graft.functions.NativeExprs.shingles(toks, 2)))
+          .cast("double") / (n - 1), 6)
+        tokenized.select(quality :+
+          coalesce(when(n >= 2, dup), lit(0.0)).as("dup_fraction"): _*)
+      case Some(rep) =>
+        tokenized.select(quality: _*)
+          .join(rep.select(col(idCol), col("dup_gram_fraction")), Seq(idCol), "left")
+          .withColumn("dup_fraction", coalesce(col("dup_gram_fraction"), lit(0.0)))
+    }
+    signals
       .withColumn("_reasons", concat_ws(" | ",
         when(col("n_tokens") < minTokens, "too_short"),
         when(col("stop_ratio") < minStopRatio, "low_stopword_ratio"),
         when(col("dup_fraction") > maxDupFraction, "repetitive")))
       .withColumn("keep", col("_reasons") === "")
-      .select(col(idCol), col("n_tokens"), col("stop_ratio"),
-        col("dup_fraction"), col("_reasons"), col("keep"))
+      .select(keys ++ outs.map(col): _*)
   }
 
   /** C4-style word-blocklist gate (Raffel et al. 2020 §2.2 — the "bad
@@ -1115,50 +1144,59 @@ object TextAnalysis {
     * deterministic md5 shuffle order ([[corpusShuffle]]) and cut into
     * `numShards` contiguous runs of ~equal TOKEN mass (not document count),
     * so every output shard feeds a trainer the same work. The global
-    * running-token prefix sum uses the two-phase shape shared with the
-    * surrogate-key rank: the md5 hex prefix buckets the order (a hex prefix
-    * is order-preserving, so buckets tile the global order), a window
-    * cumsums within each bucket, and per-bucket totals prefix-sum through a
-    * broadcast triangular join — no single-partition window anywhere, and
-    * shard boundaries are identical on every engine/run/retry. Downstream,
+    * running-token prefix sum uses the two-phase shape of
+    * [[Star.withSurrogateKey]]: the md5 hex prefix buckets the order (a hex
+    * prefix is order-preserving, so buckets tile the global order), the
+    * per-bucket token totals — at most 256 rows, one map-side partial
+    * aggregate — are collected and prefix-summed on the driver into a
+    * literal offset array (their sum is the literal corpus total), and the
+    * consumer's own job cumsums within each bucket and adds its offset. No
+    * single-partition window, no join, no cross join; the price is a
+    * second tokenize+md5 scan of the input for the totals. Shard boundaries
+    * are identical on every engine/run/retry. Downstream,
     * `df.write.partitionBy(shard)` lays the corpus out one directory per
-    * shard (spec-verified round trip). Output: (id, n_tokens, shard). */
+    * shard (spec-verified round trip).
+    *
+    * Null-id rows take no shard and are dropped; their tokens still count
+    * in the total. Null-text rows have null `n_tokens` and a shard from
+    * their position; an input whose texts are all null has no token
+    * budget, and `least` puts every row in the last shard.
+    *
+    * `carry` names per-document columns to ride through to the output, so
+    * a caller laying out the documents themselves needs no join back.
+    * Output: (id, carry..., n_tokens, shard). */
   def shardTokenBudget(docs: DataFrame, idCol: String, textCol: String,
-                       numShards: Int): DataFrame = {
+                       numShards: Int, carry: Seq[String] = Nil): DataFrame = {
     require(numShards > 0, "numShards must be positive")
-    val keyed = docs.select(col(idCol),
+    require(!carry.exists(Set("n_tokens", "shard", "_skey", "_pid", "_cum_local", idCol)),
+      s"carry collides with shardTokenBudget internals: $carry")
+    val keys = col(idCol) +: carry.map(col)
+    val keyed = docs.select(keys ++ Seq(
       size(tokens(col(textCol))).cast("long").as("n_tokens"),
       concat(md5(col(idCol).cast("string").cast("binary")),
-        col(idCol).cast("string")).as("_skey"))
+        col(idCol).cast("string")).as("_skey")): _*)
     // 256 order-preserving buckets from the first two hex chars ('0'..'f'
     // sort below each other identically in ASCII and numerically)
     val bucketed = keyed.withColumn("_pid",
       conv(substring(col("_skey"), 1, 2), 16, 10).cast("int"))
+    // bucket -> token total (null when every text in it is null); the
+    // null-id bucket counts in the total but offsets no bucket
+    val counts = bucketed.groupBy(col("_pid")).agg(sum(col("n_tokens")))
+      .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]),
+        Option(r.get(1)).map(_.asInstanceOf[Long])))
+    val perBucket = counts.collect { case (Some(b), Some(c)) => b -> c }.toMap
+    val offsets = (0 until 255).scanLeft(0L)((acc, b) => acc + perBucket.getOrElse(b, 0L))
+    val total = counts.flatMap(_._2).reduceOption(_ + _)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_pid")).orderBy(col("_skey"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val local = bucketed.withColumn("_cum_local",
-      coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-    // Per-bucket totals are read OFF the window output (the bucket's last
-    // cumulative value: max of exclusive-prefix + own, exact since token
-    // counts are nonnegative) rather than re-aggregated from `bucketed` —
-    // a second aggregate over `bucketed` re-runs the tokenize+md5 scan at
-    // corpus scale, while this subtree is the window stage itself, so the
-    // shuffled corpus is computed once and the totals re-read it.
-    val counts = local.groupBy(col("_pid"))
-      .agg(max(col("_cum_local") + col("n_tokens")).as("_cnt"))
-    val offsets = counts.as("a")
-      .join(broadcast(counts.as("b")), col("b._pid") < col("a._pid"), "left")
-      .groupBy(col("a._pid").as("_pid"))
-      .agg(coalesce(sum(col("b._cnt")), lit(0L)).as("_offset"))
-    val total = counts.agg(sum(col("_cnt")).as("_total"))
-    local.join(broadcast(offsets), "_pid")
-      .crossJoin(broadcast(total))
-      .select(col(idCol), col("n_tokens"),
+    bucketed.where(col("_pid").isNotNull)
+      .withColumn("_cum_local", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .select(keys ++ Seq(col("n_tokens"),
         least(
-          floor((col("_offset") + col("_cum_local")) /
-            ceil(col("_total") / lit(numShards.toDouble))),
-          lit(numShards - 1L)).cast("int").as("shard"))
+          floor((typedLit(offsets.toArray).getItem(col("_pid")) + col("_cum_local")) /
+            ceil(typedLit(total) / lit(numShards.toDouble))),
+          lit(numShards - 1L)).cast("int").as("shard")): _*)
   }
 
   /** Overlapping token-window chunking — the context-window preparation

@@ -80,6 +80,40 @@ class DedupSimilaritySpec extends SparkSpec {
       (5L, 2L, false), (6L, 6L, true), (7L, 6L, false)))
   }
 
+  test("nearDupClusters: driver union-find and distributed rounds agree on chains, stars, singletons") {
+    val docs = (1L to 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq(
+      (9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L),        // chain 5..9 listed high to low (diameter 4)
+      (12L, 10L), (12L, 11L), (12L, 13L), (12L, 14L), // star around 12: label 10 reaches 11/13/14
+      (20L, 21L), (21L, 20L), (22L, 22L),              // a pair listed both ways, a self-loop
+      (25L, 30L), (27L, 30L), (26L, 27L)               // two arms meeting at 30
+    ).toDF("doc_a", "doc_b")
+    def clusters(bound: Long) = Dedup.nearDupClusters(docs, pairs, "doc_id", rounds = 6,
+        driverEdgeBound = bound).as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    val driver = clusters(Dedup.DriverEdgeBound)
+    val distributed = clusters(0L)
+    assert(driver == distributed)
+    val label = driver.map(r => r._1 -> r._2).toMap
+    assert((5L to 9L).forall(label(_) == 5L))
+    assert((10L to 14L).forall(label(_) == 10L))
+    assert(label(20L) == 20L && label(21L) == 20L && label(22L) == 22L)
+    assert(Seq(25L, 26L, 27L, 30L).forall(label(_) == 25L))
+    assert(Seq(1L, 2L, 3L, 4L, 15L, 28L, 29L).forall(i => label(i) == i))
+    assert(driver.filter(_._3).map(_._1).toSet ==
+      Set(1L, 2L, 3L, 4L, 5L, 10L, 15L, 16L, 17L, 18L, 19L, 20L, 22L, 23L, 24L, 25L, 28L, 29L))
+    // no pairs at all: every document is its own representative on both carriers
+    val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    for (bound <- Seq(Dedup.DriverEdgeBound, 0L))
+      assert(Dedup.nearDupClusters(docs, none, "doc_id", driverEdgeBound = bound)
+        .where(!col("kept") || col("doc_id") =!= col("cluster_id")).isEmpty)
+    // int ids take the driver carrier too and come out as longs, like before
+    val intOut = Dedup.nearDupClusters(docs.select(col("doc_id").cast("int").as("doc_id")),
+      pairs.select(col("doc_a").cast("int").as("doc_a"), col("doc_b").cast("int").as("doc_b")),
+      "doc_id")
+    assert(intOut.schema == Dedup.nearDupClusters(docs, pairs, "doc_id", driverEdgeBound = 0L).schema)
+    assert(intOut.as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq == driver)
+  }
+
   test("nearDupSimHash recall guarantee: equals brute-force hamming+jaccard pair set") {
     // Deterministic corpus with a spread of hamming distances: each doc
     // mutates a different subset of a shared vocabulary.

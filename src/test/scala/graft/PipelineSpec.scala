@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -16,19 +17,62 @@ class PipelineSpec extends SparkSpec {
     "error/orders", "dwh/dim_customer", "dwh/dim_date", "dwh/fact_orders",
     "dwh/fact_lineitem", "report/zone_stats", "report/rule_audit")
 
-  /** Stage names of every job that starts without a SQL execution id while
-    * `body` runs. Spark's parquet schema inference (`spark.read.parquet`
-    * without a schema) is exactly this class of job. */
-  private def jobsWithoutSqlExecution(body: => Unit): Seq[String] = {
+  /** Every zone CorpusPipeline.runAll writes with span scrub, tokenizer
+    * and perplexity buckets on (the run report is compared on stage and
+    * rows: its seconds differ run to run). */
+  private val corpusZones = Seq("raw/documents", "rejected/documents", "gated/documents",
+    "capped/documents", "deduped/documents", "span_scrubbed/documents",
+    "tokenized/documents", "ppl/documents", "shards/documents", "tokenizer/merges")
+
+  /** A small corpus that exercises every stage: gate rejects (short,
+    * stopword-free, repetitive), a source over its cap, exact and near
+    * duplicates, a near-dup chain, and a shared span. */
+  private def corpusDocs = {
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    def text(prefix: String, n: Int) =
+      (1 to n).map(i => s"$prefix$i ${stops(i % stops.length)}").mkString(" ")
+    val t1 = text("w", 20)
+    val docs = Seq(
+      (1L, t1, "a"), (2L, t1.replace(" ", "  "), "a"),       // exact dup after normalization
+      (3L, text("w", 19) + " zz the", "a"),                   // near-dup of 1
+      (4L, text("w", 18) + " yy the zz the", "a"),            // near-dup chain via 3
+      (5L, "tiny doc", "a"),                                  // too short
+      (6L, (1 to 40).map(i => s"x$i").mkString(" "), "a"),    // no stopwords
+      (7L, Seq.fill(20)("the spam").mkString(" "), "a"),      // repetitive
+      (8L, "p1 p2 p3 p4 " + text("q", 20), "a")) ++           // shares a span with 9
+      (Seq((9L, "p1 p2 p3 p4 " + text("r", 20), "b"))) ++
+      (10L to 16L).map(i => (i, text(s"b${i}x", 20), "b"))    // source b over its cap
+    docs.toDF("doc_id", "text", "source")
+  }
+
+  private def runCorpus(out: String, runId: String) =
+    CorpusPipeline.runAll(spark, corpusDocs, out, runId,
+      minTokens = 10, minStopRatio = 0.05, maxDupFraction = 0.5,
+      capPerSource = 6, nearDupThreshold = 0.7, numShards = 3,
+      spanScrub = Some(4), bpeMerges = Some(8), pplBuckets = Some(2))
+
+  /** Runs `body` and returns `describe(job, its SQL execution's
+    * description)` for every job that started while it ran and `describe`
+    * picks out. The description is the call site of the Dataset action
+    * that started the execution ("count at Foo.scala:12") — AQE runs most
+    * of an action's jobs from its own threads, so their stage names don't
+    * carry it. */
+  private def jobsDuring(body: => Unit)(
+      describe: (SparkListenerJobStart, Option[String]) => Option[String]): Seq[String] = {
     val marker = "graft.spec.marker"
     val found = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         if (props.exists(_.getProperty(marker) != null)) markerSeen.countDown()
-        else if (props.forall(_.getProperty("spark.sql.execution.id") == null))
-          found.add(e.stageInfos.map(_.name).mkString(", "))
+        else describe(e, props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(executions.get(id)))).foreach(found.add)
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -43,6 +87,23 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
     found.asScala.toSeq
   }
+
+  /** Stage names of every job that starts without a SQL execution id while
+    * `body` runs. Spark's parquet schema inference (`spark.read.parquet`
+    * without a schema) is exactly this class of job. */
+  private def jobsWithoutSqlExecution(body: => Unit): Seq[String] =
+    jobsDuring(body) { (e, _) =>
+      if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+        Some(e.stageInfos.map(_.name).mkString(", "))
+      else None
+    }
+
+  /** Call sites of every job started by a `count()` or `isEmpty` while
+    * `body` runs. */
+  private def countOrIsEmptyJobs(body: => Unit): Seq[String] =
+    jobsDuring(body) { (e, execution) =>
+      (execution.toSeq ++ e.stageInfos.map(_.name)).find(_.matches("(count|isEmpty) at .*"))
+    }
 
   test("runAll drives stage -> quality -> DWH end-to-end with a run report") {
     val out = Files.createTempDirectory("graft_pipe").toFile.getAbsolutePath
@@ -133,6 +194,73 @@ class PipelineSpec extends SparkSpec {
     // the surrogate keys of both checkpointed dims took part
     assert(spark.read.parquet(s"$ckpt/dwh/dim_customer").columns.contains("customer_key"))
     assert(spark.read.parquet(s"$ckpt/dwh/fact_lineitem").columns.contains("part_key"))
+  }
+
+  test("CorpusPipeline lineage mode (spark.graft.localCheckpoint=false) writes the same zones") {
+    val ckpt = Files.createTempDirectory("graft_corpus_ckpt").toFile.getAbsolutePath
+    val lineage = Files.createTempDirectory("graft_corpus_lineage").toFile.getAbsolutePath
+    val reportCkpt = runCorpus(ckpt, "run_cl").select("stage", "rows")
+      .as[(String, Long)].collect().toSeq
+    spark.conf.set("spark.graft.localCheckpoint", "false")
+    val reportLineage =
+      try runCorpus(lineage, "run_cl").select("stage", "rows").as[(String, Long)].collect().toSeq
+      finally spark.conf.unset("spark.graft.localCheckpoint")
+    assert(reportCkpt == reportLineage)
+    // every gate reason, the cap and both dedup kinds took part
+    val rows = reportCkpt.toMap
+    // docs 5-7 fail the gate, source b (9-16) is capped from 8 to 6, and
+    // dedup drops doc 2 (exact) and docs 3 and 4 (near-dups of doc 1)
+    assert(rows("ingest") == 16L && rows("quality_gate") == 13L && rows("source_cap") == 11L)
+    assert(rows("dedup") == 8L, s"$reportCkpt")
+    for (z <- corpusZones) {
+      val a = spark.read.parquet(s"$ckpt/$z")
+      val b = spark.read.parquet(s"$lineage/$z")
+      assert(a.schema == b.schema, z)
+      assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, z)
+    }
+  }
+
+  test("no job CorpusPipeline.runAll starts comes from a count() or isEmpty") {
+    // the detector sees both actions, over a checkpoint too
+    val probe = spark.range(50).toDF().localCheckpoint()
+    val seen = countOrIsEmptyJobs {
+      probe.count()
+      probe.where("id > 3").limit(1).isEmpty
+    }
+    assert(seen.exists(_.startsWith("count at ")) && seen.exists(_.startsWith("isEmpty at ")),
+      seen.mkString("; "))
+    val out = Files.createTempDirectory("graft_corpus_counts").toFile.getAbsolutePath
+    val found = countOrIsEmptyJobs(runCorpus(out, "run_cc").collect())
+    assert(found.isEmpty, s"count/isEmpty jobs: ${found.mkString("; ")}")
+  }
+
+  test("Ckpt.localObserved reads its aggregate off the checkpoint's own action, in both modes") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 1000).toDF("id").where(col("id") % 3 === 0)
+      .withColumn("big", col("id") > 500)
+    def observe() = {
+      var got: (org.apache.spark.sql.DataFrame, Long, Long, Long) = null
+      // the fallback runs the aggregate as a collect job: none may start
+      val collects = jobsDuring {
+        val (c, n) = Ckpt.localObserved(df, count(lit(1)))
+        val (_, big) = Ckpt.localObserved(df, sum(col("big").cast("long")))
+        val (_, none) = Ckpt.localObserved(df.where(col("id") < 0), sum(col("id")))
+        got = (c, n, big, none)
+      } { (_, execution) => execution.filter(_.startsWith("collect at")) }
+      (got, collects)
+    }
+    val ((ckpt, n, big, none), collects) = observe()
+    assert((n, big, none) == ((334L, 167L, 0L)))
+    assert(collects.isEmpty, collects.mkString("; "))
+    assert(ckpt.count() == 334L && ckpt.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r }.nonEmpty)
+    // lineage mode: the plan itself comes back, the aggregate ran as a job
+    spark.conf.set("spark.graft.localCheckpoint", "false")
+    try {
+      val ((lineage, n2, big2, none2), _) = observe()
+      assert((n2, big2, none2) == ((334L, 167L, 0L)))
+      assert(lineage eq df)
+    } finally spark.conf.unset("spark.graft.localCheckpoint")
   }
 
   test("concurrent first actions over a lazy checkpoint compute each row once") {

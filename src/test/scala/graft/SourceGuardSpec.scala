@@ -27,9 +27,16 @@ class SourceGuardSpec extends AnyFunSpec {
     * crossJoin 1-row? is the window partitioned?) or REMOVED (update the
     * table so it stays an accurate audit record). */
   private val collectBudget = Map(
+    // Ckpt.localObserved's fallback: the caller's ONE aggregate (a count
+    // or a sum) as a 1-row job, in lineage mode or on a lost observation
+    "graft/Ckpt.scala" -> 1,
     // Bpe: vocabulary collect gated by DriverVocabBound (distributed
     // fallback past it); distributed rounds' TakeOrdered(1) winner
     "graft/operators/Bpe.scala" -> 2,
+    // Dedup: nearDupClusters' edge-list collect, gated by
+    // driverEdgeBound on the observed edge count (distributed label
+    // rounds past it)
+    "graft/operators/Dedup.scala" -> 1,
     // Retrieval: vocabulary-bounded idf/stats collects with the
     // >1000-term distributed fallback
     "graft/operators/Retrieval.scala" -> 2,
@@ -44,7 +51,11 @@ class SourceGuardSpec extends AnyFunSpec {
     // Star (withSurrogateKey): the numPivots-key pivot-value collect
     // with a loud limit, and the per-bucket distinct-key counts — one row
     // per bucket, at most numPivots + 1 rows, prefix-summed on the driver
-    "graft/operators/Star.scala" -> 2)
+    "graft/operators/Star.scala" -> 2,
+    // TextAnalysis: shardTokenBudget's per-bucket token totals — one row
+    // per md5 hex-prefix bucket, at most 256 (+1 null-id bucket) rows,
+    // prefix-summed on the driver (the Star class)
+    "graft/operators/TextAnalysis.scala" -> 1)
 
   private val crossJoinBudget = Map(
     // all 1-row broadcast stats/corpus-total joins ... plus ksBySource's
@@ -85,7 +96,9 @@ class SourceGuardSpec extends AnyFunSpec {
     // + sourceTokenMi's three 1-row joins (N onto the pair table, N onto
     //   the |sources| marginals, the 1-row MI ⋈ 1-row H tail)
     // + entropyRate's 1-row bigram total onto the type table
-    "graft/operators/TextAnalysis.scala" -> 15,
+    // (shardTokenBudget's 1-row corpus-total join is gone: the total is
+    // now a literal from the driver-side bucket totals — 15 → 14)
+    "graft/operators/TextAnalysis.scala" -> 14,
     // ... except pqTopKWith's corpus x QUERY-BATCH join (the flat-PQ ADC
     // scan: every index row scores against every query's broadcast LUT
     // — bounded by the query batch, the intended shape), one 1-row

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Multimodal, TextAnalysis}
@@ -754,6 +755,44 @@ class TextIngestMultimodalSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 400)
   }
 
+  test("shardTokenBudget equals the brute-force md5-order prefix cut, incl. empty and null-text input") {
+    def expected(rows: Seq[(java.lang.Long, String)], k: Int): Set[(Long, java.lang.Long, Integer)] = {
+      def nTok(t: String): java.lang.Long =
+        if (t == null) null else java.lang.Long.valueOf(t.trim.split("\\s+", -1).length.toLong)
+      val withTok = rows.map { case (id, t) => (id, nTok(t)) }
+      val present = withTok.flatMap(r => Option(r._2).map(_.longValue))
+      val budget = if (present.isEmpty) None else Some(math.ceil(present.sum / k.toDouble))
+      val ordered = withTok.filter(_._1 != null).sortBy { case (id, _) =>
+        org.apache.commons.codec.digest.DigestUtils.md5Hex(id.toString) + id.toString }
+      val before = ordered.scanLeft(0L)((acc, r) => acc + Option(r._2).map(_.longValue).getOrElse(0L))
+      ordered.zip(before).map { case ((id, n), pre) =>
+        // no budget (every text null): least() skips the null cut, last shard
+        (id.longValue, n, Integer.valueOf(budget.map(b =>
+          math.min(math.floor(pre / b).toLong, k - 1L).toInt).getOrElse(k - 1)))
+      }.toSet
+    }
+    def actual(rows: Seq[(java.lang.Long, String)], k: Int) =
+      TextAnalysis.shardTokenBudget(rows.toDF("doc_id", "text"), "doc_id", "text", k)
+        .as[(Long, java.lang.Long, Integer)].collect().toSet
+    val mixed: Seq[(java.lang.Long, String)] = (1L to 60L).map { i =>
+      (java.lang.Long.valueOf(i),
+        if (i % 7 == 0) null else Seq.fill((i % 9 + 1).toInt)(s"t$i").mkString(" "))
+    } :+ ((null: java.lang.Long, "a null id still spends its tokens"))
+    assert(actual(mixed, 4) == expected(mixed, 4))
+    assert(actual(mixed, 4).map(_._3).filter(_ != null).map(_.intValue) == Set(0, 1, 2, 3))
+    assert(actual(mixed, 1) == expected(mixed, 1))
+    assert(actual(Nil, 4).isEmpty)
+    val allNull: Seq[(java.lang.Long, String)] = (1L to 5L).map(i => (java.lang.Long.valueOf(i), null: String))
+    assert(actual(allNull, 3) == expected(allNull, 3))
+    assert(actual(allNull, 3).forall(r => r._2 == null && r._3 == 2))
+    // carried columns ride through unchanged, ahead of the assignment
+    val docs = mixed.toDF("doc_id", "text").withColumn("source", lit("s"))
+    val carried = TextAnalysis.shardTokenBudget(docs, "doc_id", "text", 4, Seq("text", "source"))
+    assert(carried.columns.toSeq == Seq("doc_id", "text", "source", "n_tokens", "shard"))
+    assert(carried.drop("text", "source").as[(Long, java.lang.Long, Integer)].collect().toSet ==
+      expected(mixed, 4))
+  }
+
   test("sourceCap keeps at most k docs per source, deterministically") {
     val docs = (1L to 30L).map(i => (i, s"src${i % 3}", "t")).toDF("doc_id", "source", "text")
     val out = TextAnalysis.sourceCap(docs, "doc_id", "source", 4)
@@ -793,6 +832,44 @@ class TextIngestMultimodalSpec extends SparkSpec {
       .collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(shared == out)
   }
+
+  test("map-side corpusGate equals the repetitionFilter join path on edge-case docs") {
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    val docs = Seq[(Long, String)](
+      (1L, ""),                                        // one empty token
+      (2L, "word"),                                    // 1 token: no bigram
+      (3L, "the word"),                                // 2 tokens: one bigram
+      (4L, null),                                      // null text
+      (5L, "\tlead tab and tail\t"),                   // tabs survive trim: "" tokens
+      (6L, "  leading spaces of the doc"),             // trimmed
+      (7L, " \t mixed  \t whitespace run of a doc"),   // leading space then tab
+      (8L, Seq.fill(20)("spam ham").mkString(" ")),    // all bigrams repeat
+      (9L, Seq.fill(30)("x").mkString(" ")),           // one repeated bigram
+      (10L, (1 to 40).map(i => s"w$i ${stops(i % 7)}").mkString(" "))
+    ).toDF("doc_id", "text").withColumn("source", lit("s"))
+    def gate(rep: Option[DataFrame], carry: Seq[String] = Nil) =
+      TextAnalysis.corpusGate(docs, "doc_id", "text", 3, 0.05, 0.2, rep, carry)
+    val mapSide = gate(None)
+    val joined = gate(Some(TextAnalysis.repetitionFilter(docs, "doc_id", "text", 2, 0.2)))
+    assert(mapSide.columns.toSeq ==
+      Seq("doc_id", "n_tokens", "stop_ratio", "dup_fraction", "_reasons", "keep"))
+    assert(mapSide.schema == joined.schema)
+    assert(mapSide.count() == 10)
+    assert(mapSide.exceptAll(joined).isEmpty && joined.exceptAll(mapSide).isEmpty)
+    val dup = mapSide.select("doc_id", "dup_fraction").as[(Long, Double)].collect().toMap
+    assert(dup(1L) == 0.0 && dup(2L) == 0.0 && dup(3L) == 0.0 && dup(4L) == 0.0)
+    assert(dup(8L) == round6(37.0 / 39) && dup(9L) == round6(28.0 / 29))
+    // carried columns ride between the id and the signals, values unchanged
+    val carried = gate(None, Seq("text", "source"))
+    assert(carried.columns.take(3).toSeq == Seq("doc_id", "text", "source"))
+    assert(carried.drop("text", "source").exceptAll(mapSide).isEmpty)
+    assert(carried.select("doc_id", "text").exceptAll(docs.select("doc_id", "text")).isEmpty)
+    assert(gate(Some(TextAnalysis.repetitionFilter(docs, "doc_id", "text", 2, 0.2)),
+      Seq("text", "source")).exceptAll(carried).isEmpty)
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("blocklistGate matches tokens, never substrings (the Scunthorpe guard)") {
     val docs = Seq(
